@@ -168,7 +168,7 @@ BASELINES = {
     "dedup_minhash_lsh": 2.662,
     "dedup_simhash": 2.648,
     # RE-CALIBRATED IN-CONTEXT r7 (VERDICT r6 #1): the old 0.604 was a
-    # SOLO min; tools/bench_diag.py measured the query min-of-5 AT ITS
+    # SOLO min; a round-6 diagnosis run measured the query min-of-5 AT ITS
     # BENCH POSITION in three full-sequence runs (quiet asis 0.718 @
     # est 0.998, quiet hygiene 0.696 @ 1.012, loaded 0.765 @ 1.79) —
     # in-context cost is ~1.15-1.2x solo for this numpy-Arrow kernel

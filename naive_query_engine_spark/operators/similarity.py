@@ -22,6 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..queries import cut_lineage, query, t
 
 QUANT = 1_000_000  # quantization scale; |v|<~100 keeps all sums << 2^53
@@ -58,25 +59,14 @@ def cosine_q(dot: Column, na2: Column, nb2: Column) -> Column:
     return dot.cast("double") / (F.sqrt(na2.cast("double")) * F.sqrt(nb2.cast("double")))
 
 
-#: session-scoped cache of the CUT (materialized) quantized corpus frame
-#: (vec_id, q, nrm2) — the substrate iterative vector operators fold over
-#: (r14).  Each consumer previously re-ran the quantize scan + an eager
-#: spread/checkpoint job per invocation; one cut frame per session
-#: serves them (reuse changes no results — identical relation).
-_CUT_QT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("cut_qtable")
 def cached_cut_qtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ``cut_lineage(spread(_qtable(...)))`` with columns
-    (vec_id, q, nrm2).  EAGER on first build (the cut materializes)."""
+    (vec_id, q, nrm2) — the substrate iterative vector operators fold
+    over.  EAGER on first build (the cut materializes)."""
     from ..queries import spread
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CUT_QT_CACHE:
-        _CUT_QT_CACHE[key] = cut_lineage(
-            spread(_qtable(spark, sf_dir).select("vec_id", "q", "nrm2"))
-        )
-    return _CUT_QT_CACHE[key]
+    return cut_lineage(spread(_qtable(spark, sf_dir).select("vec_id", "q", "nrm2")))
 
 
 def _qtable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,22 +165,14 @@ def _blocked_frame(qt: DataFrame, block_size: int = COSINE_BLOCK_SIZE) -> DataFr
     )
 
 
-#: session-scoped cache of the blocked corpus frame (r14, guide §1.2/§5):
-#: four registered all-pairs consumers (thresholded cosine, mutual k-NN,
-#: TwoNN, semantic components) each re-ran the grouping job + eager cut
-#: per invocation over the identical full-corpus quantized frame.  One
-#: cut frame per session serves them all; reuse changes no results.
-_BLOCKED_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@session_memo("blocked_frame")
 def cached_blocked_frame(
     spark: SparkSession, sf_dir: str, block_size: int = COSINE_BLOCK_SIZE
 ) -> DataFrame:
-    """Session-cached :func:`_blocked_frame` over the corpus ``_qtable``."""
-    key = (spark.sparkContext.applicationId, sf_dir, block_size)
-    if key not in _BLOCKED_CACHE:
-        _BLOCKED_CACHE[key] = _blocked_frame(_qtable(spark, sf_dir), block_size)
-    return _BLOCKED_CACHE[key]
+    """Session-cached :func:`_blocked_frame` over the corpus ``_qtable`` —
+    shared by the all-pairs consumers (thresholded cosine, mutual k-NN,
+    TwoNN, semantic components)."""
+    return _blocked_frame(_qtable(spark, sf_dir), block_size)
 
 
 def block_pair_frame(
@@ -700,30 +682,13 @@ def _label_cells(
     return _cells_from_scored(_score_cells(qt), nprobe)
 
 
-#: session-scoped cache of the ``_score_cells`` frame, keyed by (spark
-#: application id, sf_dir) — the in-session stand-in for the MAINTAINED
-#: coarse-quantizer assignment of a deployed IVF index (the
-#: `_IVF_ASSIGN_CACHE` / `cached_capped_index` precedent).  FOUR
-#: registered queries ride it (ivf_topk, ivf_multiprobe, ivfpq_adc_topk,
-#: and pq_adc via the shared `_qtable` scan shape); before r14 each
-#: re-ran the posexplode centroid aggregation + per-row cell ranking per
-#: invocation and `_ivf_search` additionally left one new spillable
-#: persist of the qtable behind PER CALL.  One persisted frame per
-#: session serves every (consumer, nprobe): reuse changes no results —
-#: every consumer reads the identical relation.
-_SCORED_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("scored_cells")
 def cached_scored_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached :func:`_score_cells` over the corpus qtable,
-    persisted MEMORY_AND_DISK.  Lazy: no job runs until a consumer's
-    first action."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCORED_CELLS_CACHE:
-        _SCORED_CELLS_CACHE[key] = _score_cells(_qtable(spark, sf_dir)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    return _SCORED_CELLS_CACHE[key]
+    persisted MEMORY_AND_DISK — the maintained coarse-quantizer
+    assignment every (IVF consumer, nprobe) reads.  Lazy: no job runs
+    until a consumer's first action."""
+    return _score_cells(_qtable(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _ivf_search(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
@@ -1028,35 +993,20 @@ def _pq_parts(qt: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     return subcent, subv, codes
 
 
-#: session-scoped cache of the PQ substrate (subcent, subv, codes, adc),
-#: keyed by (spark application id, sf_dir) — the in-session stand-in for
-#: the MAINTAINED PQ codebook + code table of a deployed index (the
-#: `_IVF_ASSIGN_CACHE` precedent; flagged as the r14 candidate in
-#: OPTIMIZATION_r13 "Not yet optimized").  TWO registered queries ride it
-#: (`similarity_pq_adc_topk`, `similarity_ivfpq_adc_topk`); before r14
-#: each re-ran the posexplode codebook aggregation + encode join per
-#: invocation.  Reuse changes no results: every consumer reads the
-#: identical relations.
-_PQ_SUBSTRATE_CACHE: dict[
-    tuple[str, str], tuple[DataFrame, DataFrame, DataFrame, DataFrame]
-] = {}
-
-
+@session_memo("pq_substrate")
 def cached_pq_substrate(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Session-cached (subcent, subv, codes, adc): the PQ codebook, the
     per-(vector, subspace) slices, each vector's codes and the per-query
-    ADC lookup tables — codes and adc persisted (the frames consumers
+    ADC lookup tables — the maintained codebook + code table both PQ
+    queries read.  codes and adc are persisted (the frames consumers
     actually scan; subcent/adc are labels×M / queries×M×labels tiny).
     Lazy: no job runs until a consumer's first action."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_SUBSTRATE_CACHE:
-        subcent, subv, codes = _pq_parts(_qtable(spark, sf_dir))
-        codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
-        adc = _pq_adc_tables(subv, subcent).persist(StorageLevel.MEMORY_AND_DISK)
-        _PQ_SUBSTRATE_CACHE[key] = (subcent, subv, codes, adc)
-    return _PQ_SUBSTRATE_CACHE[key]
+    subcent, subv, codes = _pq_parts(_qtable(spark, sf_dir))
+    codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
+    adc = _pq_adc_tables(subv, subcent).persist(StorageLevel.MEMORY_AND_DISK)
+    return subcent, subv, codes, adc
 
 
 def _pq_adc_tables(subv: DataFrame, subcent: DataFrame) -> DataFrame:

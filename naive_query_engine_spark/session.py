@@ -114,11 +114,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same entry point works in the test harness and the bench driver.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    ``os.cpu_count()``) so the same entry point serves the tests and
+    ``bench.py`` without oversubscribing a small host.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = {**DEFAULT_CONF, **(extra_conf or {})}

@@ -7,6 +7,7 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from naive_query_engine_spark.queries import QUERIES
 
@@ -934,6 +935,16 @@ def test_cross_source_overlap_matches_recompute(spark):
             assert (g["shared_shingles"], g["union_shingles"]) == (shared, union)
             assert g["jaccard_fp"] == (shared * OVERLAP_FP) // union
     assert want_pairs == len(got)
+
+
+def test_cross_source_overlap_rejects_65_sources(spark, tmp_path):
+    # the per-shingle source set is a 64-bit mask: a 65th source would
+    # alias source 1 (shiftleft masks its count to 6 bits), so it must fail
+    docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
+    docs["source"] = [f"src{i % 65:02d}" for i in docs["doc_id"]]
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    with pytest.raises(Exception, match="over 64 sources"):
+        QUERIES["dedup_cross_source_overlap"].fn(spark, str(tmp_path)).collect()
 
 
 # ---------------------------------------------------------------------------

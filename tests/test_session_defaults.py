@@ -60,3 +60,33 @@ def test_last_occurrence_wins_and_bare_key_clears(tmp_path, monkeypatch):
 def test_prefix_key_is_not_matched(tmp_path, monkeypatch):
     # a longer key sharing the prefix must not be read as ours
     assert _parse(tmp_path, monkeypatch, f"{KEY}.extra -Xmx4g") == ""
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records the master URL."""
+
+    master_url = None
+
+    def appName(self, _name):
+        return self
+
+    def master(self, url):
+        _RecordingBuilder.master_url = url
+        return self
+
+    def config(self, _key, _value):
+        return self
+
+    def getOrCreate(self):
+        return None
+
+
+def test_default_master_uses_every_host_cpu(monkeypatch):
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    session.get_spark()
+    assert _RecordingBuilder.master_url == "local[3]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    session.get_spark()
+    assert _RecordingBuilder.master_url == "local[7]"

@@ -1,12 +1,12 @@
-"""Dump `.explain("formatted")` for the r14 optimization targets.
+"""Dump `.explain("formatted")` for one optimization round's targets.
 
-Writes plans/r14/<query>_<tag>.txt for each named query (tag = argv[1],
-"before" or "after").  Runs under SPARK_GRAFT_LAZY_CUTS=1 so plan
-construction for cut-lineage operators does not execute Spark jobs; the
-pre-cut lineage (iteration exchanges included) is visible, matching how
-PLANS.md documents those operators.
+Writes plans/<round>/<query>_<tag>.txt for each named query (round =
+argv[1], e.g. "r14"; tag = argv[2], "before" or "after").  Runs under
+SPARK_GRAFT_LAZY_CUTS=1 so plan construction for cut-lineage operators
+does not execute Spark jobs; the pre-cut lineage (iteration exchanges
+included) is visible, matching how PLANS.md documents those operators.
 
-Usage: python tools/dump_r14_plans.py before [names...]
+Usage: python tools/dump_round_plans.py r14 before [names...]
 """
 
 from __future__ import annotations
@@ -39,16 +39,19 @@ DEFAULT_TARGETS = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or DEFAULT_TARGETS
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or DEFAULT_TARGETS
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="nqes-r14-plans")
+    spark = get_spark(app_name=f"nqes-{rnd}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        spark.sparkContext.setJobDescription(f"r14 plan dump: {name}")
+        spark.sparkContext.setJobDescription(f"{rnd} plan dump: {name}")
         df = QUERIES[name].fn(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

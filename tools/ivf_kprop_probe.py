@@ -24,8 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from naive_query_engine_spark import get_spark  # noqa: E402
-from naive_query_engine_spark.operators import kmeans  # noqa: E402
+from naive_query_engine_spark import get_spark, memo  # noqa: E402
 from naive_query_engine_spark.operators.kmeans import (  # noqa: E402
     KMEANS_K,
     ivf_mutual_knn_edges,
@@ -71,19 +70,18 @@ def synthesize(spark, n_copies: int, out_dir: str) -> None:
     )
 
 
-def evict_ivf_caches(spark, sf_dir: str, k_cells: int) -> None:
-    """Drop the session-cached IVF state for one (corpus, K) so a repeat
-    timing measures the BUILD again, not a cached localCheckpoint read
-    (ADVICE r7: the min-of-2 loop was otherwise defeated by
-    _IVF_EDGES_CACHE — the second call returned the materialized frame
-    and 'edges_build_sec' reported a cached-scan time)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_cells)
-    for cache in (
-        kmeans._IVF_PAIRS_CACHE,
-        kmeans._IVF_EDGES_CACHE,
-        kmeans._IVF_ASSIGN_CACHE,
+def evict_ivf_caches() -> None:
+    """Drop the session-memoized IVF state so a repeat timing measures the
+    BUILD again, not a cached localCheckpoint read (ADVICE r7: the min-of-2
+    loop was otherwise defeated by the memoized edge frame — the second
+    call returned the materialized frame and 'edges_build_sec' reported a
+    cached-scan time)."""
+    for name in (
+        "ivf_corpus_assignment",
+        "ivf_cell_cosine_pairs",
+        "ivf_mutual_knn_edges",
     ):
-        cache.pop(key, None)
+        memo.clear(name)
 
 
 def main() -> None:
@@ -98,7 +96,7 @@ def main() -> None:
             res = {"scale_x": n, "k_cells": k}
             best = float("inf")
             for _ in range(2):
-                evict_ivf_caches(spark, work, k)  # min-of-2 COLD builds
+                evict_ivf_caches()  # min-of-2 COLD builds
                 t0 = time.perf_counter()
                 ivf_mutual_knn_edges(spark, work, k_cells=k).write.format(
                     "noop"
