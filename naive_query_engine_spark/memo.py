@@ -1,6 +1,7 @@
-"""Session memo: the one store for frames an operator builds once per
-session and reuses across queries (signature tables, shingle and term
-indexes, trained centroids, cut corpus frames).
+"""Session memo: the one store for what is built once per session and
+reused across queries — the frames operators build (signature tables,
+shingle and term indexes, trained centroids, cut corpus frames) and the
+inferred schema of each corpus table ``sources.read_corpus_table`` reads.
 
 ``@session_memo(name)`` wraps a builder ``f(spark, sf_dir, *args)``.  An
 entry is found by (application id, name, arguments after ``spark`` with
@@ -21,6 +22,7 @@ import functools
 import inspect
 import os
 from collections import Counter
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 
@@ -32,7 +34,11 @@ _hits: Counter = Counter()
 
 def fingerprint(sf_dir: str) -> tuple:
     """Sorted (relative path, size, mtime_ns) of every file under
-    ``sf_dir``; empty for a path with no local files."""
+    ``sf_dir`` (a local path or ``file:`` URI); empty for a path with no
+    local files."""
+    url = urlsplit(sf_dir)
+    if url.scheme == "file":
+        sf_dir = url.path
     files = []
     for root, _, names in os.walk(sf_dir):
         for n in names:

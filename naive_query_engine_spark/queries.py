@@ -63,6 +63,10 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc:
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test-corpus table (lazy parquet scan → full pushdown/pruning).
 
+    Each call is a fresh relation; its schema is inferred once per corpus
+    version (see ``read_corpus_table``), so building a query over tables
+    the session has already read starts no Spark job.
+
     The corpus stores naive (no-timezone) microsecond timestamps, which
     Spark >= 3.4 reads as TIMESTAMP_NTZ — the exact analog of DuckDB's
     naive TIMESTAMP, so both engines see identical wall-clock values with

@@ -8,10 +8,13 @@ Reference surface (SURVEY §2.1):
   here ``df.write.*`` is the superset → :func:`write_table`
 
 Design notes (scale):
-- Reads are **lazy**; schema inference is the only registration-time work.
-  The reference eagerly materializes the whole CSV at registration
-  (csv.rs:53-75) — at 100 TB that is not an option, and laziness costs us
-  nothing observable (bad files still fail fast at schema-inference time).
+- Reads are **lazy**; schema inference is the only registration-time work,
+  and a corpus table pays it once per corpus version (the reference's
+  catalog likewise registers a table once and serves its schema on every
+  lookup, catalog.rs:20-65).  The reference eagerly materializes the whole
+  CSV at registration (csv.rs:53-75) — at 100 TB that is not an option,
+  and laziness costs us nothing observable: a bad file still fails fast,
+  at the first read of each corpus version, where its schema is inferred.
 - Column pruning / predicate pushdown reach the scan via Catalyst; the
   reference's CsvTable *ignores* its projection argument (csv.rs:94-96),
   ours prunes for real (see tests/test_plans.py).
@@ -23,6 +26,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from .. import memo
 
 #: canonical test-corpus tables (TESTDATA.md)
 TPCH_TABLES = (
@@ -126,8 +131,22 @@ def empty_table(spark: SparkSession, schema: StructType | str) -> DataFrame:
     return spark.createDataFrame([], schema=schema)
 
 
+@memo.session_memo("corpus_schema")
+def _corpus_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Spark's own parquet inference (a one-task job reading a footer)."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+
+
 def read_corpus_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test-corpus table.
+    """Load one test-corpus table: a fresh lazy relation on every call
+    (self-joins need fresh attribute ids), read with a schema inferred
+    once per corpus version.
+
+    The schema is a ``corpus_schema`` entry of the session memo, so a
+    rewritten ``sf_dir`` re-infers and ``memo.clear()`` drops it; a read
+    of a table the session has seen starts no Spark job.  A path the memo
+    cannot fingerprint (remote or missing) is inferred on every read: a
+    stale schema would silently drop or null columns.
 
     Corpus timestamps are naive (no-timezone) microseconds, which Spark
     >= 3.4 reads as TIMESTAMP_NTZ — the exact analog of DuckDB's naive
@@ -140,13 +159,13 @@ def read_corpus_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
+    infer = _corpus_schema if memo.fingerprint(sf_dir) else _corpus_schema.__wrapped__
+    df = spark.read.schema(infer(spark, sf_dir, name)).parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 def register_sf_dir(spark: SparkSession, sf_dir: str, tables: Iterable[str] = TPCH_TABLES) -> None:

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import stat
 import sys
 
 import duckdb
@@ -33,6 +35,16 @@ def duck():
         )
     yield con
     con.close()
+
+
+def live_copy(tmp_path):
+    """A writable copy of the smoke corpus, for tests that rewrite a table
+    inside a live session."""
+    live = tmp_path / "live"
+    shutil.copytree(SF_SMOKE, live)
+    for f in live.iterdir():
+        f.chmod(f.stat().st_mode | stat.S_IWUSR)
+    return live
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

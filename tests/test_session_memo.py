@@ -9,7 +9,6 @@ import hashlib
 import os
 import re
 import shutil
-import stat
 
 import pandas as pd
 import pytest
@@ -17,7 +16,7 @@ import pytest
 from naive_query_engine_spark import memo
 from naive_query_engine_spark.queries import QUERIES
 
-from .conftest import SF_SMOKE, normalize
+from .conftest import SF_SMOKE, live_copy, normalize
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "naive_query_engine_spark")
@@ -129,10 +128,7 @@ def test_rewritten_source_is_rebuilt(spark, tmp_path, table, query, before):
     """A corpus rewritten in place inside a live session must be re-read:
     the second answer equals the one a fresh session gives for the new
     data (a path nothing was ever built for), not the old corpus's."""
-    live = tmp_path / "live"
-    shutil.copytree(SF_SMOKE, live)
-    for f in live.iterdir():
-        f.chmod(f.stat().st_mode | stat.S_IWUSR)
+    live = live_copy(tmp_path)
     for name in before:
         QUERIES[name].fn(spark, str(live)).count()
     first = _result_hash(spark, query, str(live))
@@ -145,6 +141,24 @@ def test_rewritten_source_is_rebuilt(spark, tmp_path, table, query, before):
     second = _result_hash(spark, query, str(live))
     assert second != first
     assert second == _result_hash(spark, query, str(tmp_path / "fresh"))
+
+
+def test_rewritten_source_behind_file_uri_is_rebuilt(spark, tmp_path):
+    """A ``file:`` URI sf_dir is fingerprinted like its local path, so a
+    rewrite is noticed (the URI string once gave every such path the same
+    empty fingerprint and the stale entry was served)."""
+    live = live_copy(tmp_path)
+    uri = f"file://{live}"
+    first = _result_hash(spark, "dedup_minhash_lsh", uri)
+
+    rows = pd.read_parquet(live / "documents.parquet")
+    rows.sample(frac=0.5, random_state=7).sort_index().to_parquet(live / "documents.parquet", index=False)
+    shutil.copytree(live, tmp_path / "fresh")
+
+    second = _result_hash(spark, "dedup_minhash_lsh", uri)
+    assert second != first
+    assert second == _result_hash(spark, "dedup_minhash_lsh", str(tmp_path / "fresh"))
+    assert memo.fingerprint(uri) == memo.fingerprint(f"file:{live}") == memo.fingerprint(str(live)) != ()
 
 
 def test_no_operator_module_keeps_its_own_cache():
